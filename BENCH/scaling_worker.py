@@ -153,7 +153,7 @@ def main() -> None:
 
     # order-insensitive fingerprints of the outputs
     def fingerprint(name: str, rn: int) -> int:
-        df = spark.read.parquet(cat._round_dir(name, rn))
+        df = cat.read_staged(name, rn)
         row = df.select(
             F.expr(
                 "bit_xor("

@@ -12,11 +12,12 @@ Reimplements (public-knowledge, from observed behavior + published docs):
   ``https://this-is-sparta.de?url=url-query-param`` (scheduler_test.go:51-60).
 * Component parsing semantics of Go ``net/url`` (Hostname() strips port).
 
-All exposed to Spark as Arrow-batched pandas UDFs (never per-row Python
-UDFs).  Inside a batch, normalization is a python loop over the batch's
-strings — acceptable because it runs worker-side over Arrow batches and the
-per-string work is tiny; extraction uses the compiled regex via pandas
-``str.findall`` (C-level loop).
+Normalization and parsing are exposed to Spark as Arrow-batched pandas
+UDFs (never per-row Python UDFs); extraction (``findall_urls``) runs
+inside the scheduler's Arrow-batch kernel (operators/scheduler.py).
+Inside a batch, normalization is a python loop over the batch's strings —
+acceptable because it runs worker-side over Arrow batches and the
+per-string work is tiny.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from urllib.parse import quote, unquote, urlsplit, urlunsplit
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import StringType
 
 # --- extraction ------------------------------------------------------------
 # Strict = scheme required.  Character set mirrors xurls path continuation:
@@ -90,14 +91,6 @@ def extract_urls_py(body: str) -> list[str]:
     if not body:
         return []
     return findall_urls(body)
-
-
-@pandas_udf(ArrayType(StringType()))
-def extract_urls(body: pd.Series) -> pd.Series:
-    """xurls-strict-compatible extraction: html/text → array<string>."""
-    return pd.Series(
-        [findall_urls(b) if b else [] for b in body.fillna("")], dtype=object
-    )
 
 
 # --- normalization (purell-compatible) -------------------------------------

@@ -183,6 +183,10 @@ def bpe_encode(
     scans over the corpus and N scans over the vocab (guide §2.3:
     shuffle/compute keys, not payloads).  Output-identical; the
     unchanged oracle replays the per-document form.
+
+    Precondition: ``id_col`` is unique per row.  Token counts are summed
+    per id and joined back, so rows sharing an id would each receive the
+    SUM of their n_tokens while n_words stays per row.
     """
     words = F.filter(
         F.split(F.lower(F.col(text_col)), r"\s+"),

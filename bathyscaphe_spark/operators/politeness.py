@@ -180,13 +180,6 @@ def salted_repartition(
     return out.repartition(F.col("host"), F.col("salt"))
 
 
-def compute_priority(depth, discovered_ts, round_ts):
-    """Priority = fresher and shallower first.  Kept simple and monotone:
-    higher is better; recency decays per day since discovery."""
-    age_days = F.datediff(round_ts.cast("date"), discovered_ts.cast("date"))
-    return (F.lit(1000) - F.col(depth) * 10 - F.coalesce(age_days, F.lit(0))).cast("int")
-
-
 def drain_forecast(
     frontier: DataFrame,
     config: CrawlConfig,

@@ -4,29 +4,28 @@ Re-creates the reference scheduler (internal/scheduler/scheduler.go:93-249)
 as one declarative DataFrame pipeline per round instead of a
 record-at-a-time queue consumer:
 
-  pages → extract (X1, pandas UDF) → explode → normalize (X2, pandas UDF)
-        → F1 .onion filter → F2 protocol filter → F3 extension filter
-        → F4 forbidden-hostname filter → FNV-1/64 hash (X3, pandas UDF)
-        → D2 in-round dedup → D1 anti-join vs seen → new frontier URLs
+  pages → X1 extract + X2 normalize + F1-F3 + F4 + X3 FNV-1/64
+          (one Arrow-batch Python kernel) → robots / trap guard
+        → D2 in-round dedup (min depth) → D1 anti-join vs seen
+        → new frontier URLs
 
 Scale notes:
-* F1-F3 are pure column expressions over JVM-side ``parse_url`` — they
-  stay inside whole-stage codegen and Catalyst pushes them below the
-  explode where legal; predicate order (cheap before joins) mirrors the
-  reference's hand-ordering (scheduler.go:150-213) but is Catalyst's to
-  re-order.
-* F4 is a broadcast anti "theta" join (substring containment,
-  constraint/hostname.go:21-25).  For small blacklists (the common case)
-  it is compiled into an OR-chain column predicate — no join at all; past
-  a threshold it becomes an explicit ``broadcast()`` nested-loop anti
-  join.  Either way nothing shuffles.
+* F1-F3 are one compiled regex over the normalized url inside the
+  kernel (``_allowed_candidate_re``); rejected candidates never cross
+  the Arrow pipe.  ``extension_filter`` / ``with_url_parts`` keep the
+  JVM-side column forms of F3 and X10 for the contract queries.
+* F4 is substring containment (constraint/hostname.go:21-25).  A list
+  blacklist runs in the kernel; a DataFrame blacklist becomes a codegen'd
+  OR-chain while small and an explicit ``broadcast()`` nested-loop anti
+  join past ``_F4_EXPR_MAX`` hosts.  Either way nothing shuffles.
 * D1 shuffles both sides by url_hash (sort-merge / shuffled-hash anti
   join).  At 10^10-URL seen-set scale the optional sharded Bloom
   prefilter (operators/bloom.py) drops the candidates that cannot be new
   before the shuffle.
-* D2 uses hash-partitioned ``dropDuplicates`` — map-side partial dedup
-  then one shuffle on url_hash, reused by D1 (same key ⇒ Catalyst plans a
-  single exchange).
+* D2 is a hash aggregation on url_hash — map-side partial aggregation
+  (the kernel already combines duplicates per Arrow batch), then one
+  shuffle on url_hash, reused by D1 (same key ⇒ Catalyst plans a single
+  exchange).
 """
 
 from __future__ import annotations
@@ -36,18 +35,12 @@ from pyspark.sql import functions as F
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..config import CrawlConfig
-from ..functions.fnv import fnv1_64, fnv1_64_np
-from ..functions.urltools import URL_RE, extract_urls, findall_urls, normalize_url, normalize_url_py, url_parts_py
+from ..functions.fnv import fnv1_64_np
+from ..functions.urltools import findall_urls, normalize_url_py
+from .bloom import bloom_anti_join
+from .robots import apply_robots
 
 
 import re as _re
@@ -65,55 +58,6 @@ _ALREADY_NORMAL_RE = _re.compile(
     r"(/(?:[^/?#%]+/)*[^/?#%]+)?"      # path: no //, %, #; no trailing /
     r"(\?[^#%]*[^#%?])?$"              # optional non-empty query
 )
-
-_PARTS_RE = r"^([a-z0-9+.-]+)://([^/?#]*)((?:/[^?#]*)?)"
-
-
-def _extract_batch(pdf: pd.DataFrame, body_col: str, carry: list[str]) -> pd.DataFrame:
-    """One Arrow batch: bodies → flat candidate rows.  All hot loops are
-    pandas/numpy C-level; the exact python normalizer only runs for the
-    rare URL that is not already in normal form."""
-    bodies = pdf[body_col].fillna("")
-    found = [findall_urls(b) if b else [] for b in bodies]
-    counts = np.fromiter((len(l) for l in found), dtype=np.int64, count=len(found))
-    flat: list[str] = [u for lst in found for u in lst]
-    if not flat:
-        cols = {"src_url": [], **{c: [] for c in carry}}
-        return pd.DataFrame(
-            {
-                **cols,
-                "url": pd.Series([], dtype=object),
-                "url_hash": pd.Series([], dtype=np.int64),
-                "host": pd.Series([], dtype=object),
-                "scheme": pd.Series([], dtype=object),
-                "path": pd.Series([], dtype=object),
-            }
-        )
-    urls = pd.Series(flat, dtype=object)
-    normal = urls.str.match(_ALREADY_NORMAL_RE)
-    if not normal.all():
-        slow = urls[~normal].map(normalize_url_py)
-        urls = urls.copy()
-        urls[~normal] = slow
-        keep_mask = urls.notna()
-    else:
-        keep_mask = None
-
-    rep = np.repeat(np.arange(len(pdf)), counts)
-    out = pd.DataFrame({"src_url": pdf["url"].to_numpy()[rep]})
-    for c in carry:
-        out[c] = pdf[c].to_numpy()[rep]
-    out["url"] = urls.to_numpy()
-    if keep_mask is not None:
-        out = out[keep_mask.to_numpy()].reset_index(drop=True)
-    parts = out["url"].str.extract(_PARTS_RE)
-    out["scheme"] = parts[0]
-    # host: strip userinfo then port (rare post-normalization, vectorized)
-    netloc = parts[1].str.rpartition("@")[2]
-    out["host"] = netloc.str.replace(r":\d*$", "", regex=True)
-    out["path"] = parts[2].fillna("")
-    out["url_hash"] = fnv1_64_np(out["url"]).view(np.int64)
-    return out[["src_url", *carry, "url", "url_hash", "host", "scheme", "path"]]
 
 
 def _allowed_candidate_re(allowed_exts: tuple[str, ...]):
@@ -254,13 +198,14 @@ def extract_filtered_candidates(
     body_col: str = "html",
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """X1+X2+X3 + F1-F4 in ONE mapInPandas stage, minimal columns out.
+    """X1+X2+X3 + F1-F4 in ONE Python stage, minimal columns out.
 
     The scale hot path: pages(html, *carry) → (carry…, url, url_hash,
     host).  Parent url strings are not read in, rejected candidates are
-    dropped in-kernel, and no scheme/path strings are emitted.  Results
-    are exactly ``extract_candidates_fused → F1 → F2 → F3 → F4`` (the
-    parity-pinned path); only the column set is narrower.
+    dropped in-kernel, and no scheme/path strings are emitted.  A
+    JVM-side ``regexp_extract_all`` variant was benchmarked and rejected:
+    Java regex forces a UTF-16 materialization of every KB-scale body,
+    and measured 1.6-1.8x slower than this Arrow path at 2 and 8 cores.
     """
     carry = list(carry_cols)
     body = F.col(body_col)
@@ -286,67 +231,6 @@ def extract_filtered_candidates(
     return src.mapInPandas(_run, schema=out_schema)
 
 
-def extract_candidates_fused(
-    pages: DataFrame,
-    body_col: str = "html",
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """X1+X2+X3+X10 fused into ONE ``mapInPandas`` stage: extract
-    (xurls-strict) → normalize (purell flags, vectorized fast path) →
-    parse components (Go net/url semantics) → FNV-1/64 (numpy).
-
-    pages(url, html, *carry) → one row per candidate with
-    (src_url, *carry, url, url_hash, host, scheme, path).  Full-width
-    parity API; the crawl hot path uses ``extract_filtered_candidates``
-    (narrower columns, filters in-kernel) instead.  A JVM-side
-    ``regexp_extract_all`` variant was benchmarked and REJECTED: Java
-    regex forces a UTF-16 materialization of every KB-scale body, and
-    measured 1.6-1.8x slower than this Arrow path at 2 and 8 cores
-    (BENCH/ab_extract.py).
-    """
-    carry = list(carry_cols)
-    in_cols = [F.col("url")] + [F.col(c) for c in carry]
-    body = F.col(body_col)
-    in_cols.append(
-        F.when(body.isNotNull(), body.cast("string"))
-        .otherwise(F.lit(""))
-        .alias("_body")
-    )
-    src = pages.select(*in_cols)
-    carry_schema = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name in carry
-    )
-    out_schema = (
-        "src_url string"
-        + carry_schema
-        + ", url string, url_hash long, host string, scheme string, path string"
-    )
-
-    def _run(batches):
-        for pdf in batches:
-            yield _extract_batch(pdf, "_body", carry)
-
-    return src.mapInPandas(_run, schema=out_schema)
-
-
-def extract_candidates(pages: DataFrame, body_col: str = "html") -> DataFrame:
-    """X1+X2: pages(url, html) → one row per extracted, normalized URL.
-
-    Keeps (src_url, url); nulls from unparseable URLs are dropped, exactly
-    as the reference skips them (scheduler.go:229-236).
-    """
-    body = F.col(body_col)
-    body = F.when(body.isNotNull(), body.cast("string")).otherwise(F.lit(""))
-    return (
-        pages.select(F.col("url").alias("src_url"), body.alias("_body"))
-        .select("src_url", F.explode(extract_urls(F.col("_body"))).alias("raw_url"))
-        .select("src_url", normalize_url(F.col("raw_url")).alias("url"))
-        .where(F.col("url").isNotNull())
-    )
-
-
 def with_url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
     """JVM-side component parsing: scheme/host/path columns via parse_url
     (X10).  parse_url returns host without port, matching Go's
@@ -359,17 +243,7 @@ def with_url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-# --- F1/F2/F3 as pure column predicates ------------------------------------
-
-def onion_filter(host: Column) -> Column:
-    """F1 (scheduler.go:150-153): hostname must end with '.onion'."""
-    return host.isNotNull() & host.endswith(".onion")
-
-
-def protocol_filter(scheme: Column) -> Column:
-    """F2 (scheduler.go:155-158): scheme must start with 'http'."""
-    return scheme.isNotNull() & scheme.startswith("http")
-
+# --- F3/F4 as pure column predicates ---------------------------------------
 
 def extension_filter(path: Column, allowed_extensions: tuple[str, ...]) -> Column:
     """F3 (scheduler.go:160-189): lowercased path ends with an allowed
@@ -433,47 +307,109 @@ def schedule_candidates(
     pages: DataFrame,
     config: CrawlConfig,
     seen: DataFrame | None = None,
-    blacklist: DataFrame | list[str] | None = None,
+    blacklist: DataFrame | list[str] | tuple[str, ...] | None = None,
     round_ts: Column | None = None,
     body_col: str = "html",
     bloom=None,
-) -> DataFrame:
+    robots: DataFrame | None = None,
+    emit_edges: bool = False,
+    seen_tail: DataFrame | None = None,
+):
     """One scheduler round: pages → deduplicated new URLs to schedule.
 
-    Returns columns (url, url_hash, host, src_url) — the caller attaches
-    depth/priority/round bookkeeping.
+    Returns (url, url_hash, host, depth) with depth = min(parent depth)
+    + 1 over every page linking to the url — a deterministic min()
+    aggregation, so the output is identical at any parallelism.  Pages
+    without a ``depth`` column count as depth 0; candidates deeper than
+    ``config.max_depth`` are dropped.
+
+    ``blacklist``: a list/tuple runs F4 inside the extraction kernel; a
+    DataFrame goes through :func:`apply_hostname_blacklist`.  ``robots``
+    (optional state table) drops candidates under a disallow prefix, and
+    ``config.trap_guard_enabled`` drops crawler-trap shapes.
 
     ``seen`` rows: (url_hash long, expires_ts timestamp nullable); a hash
     counts as seen iff expires_ts is null (NoTTL) or > round_ts (D3 TTL
-    semantics, cache.go:9-12).  Rejected URLs are never marked seen —
-    only survivors reach the caller's seen-append (scheduler_test.go:242-245).
-    """
-    cand = extract_candidates_fused(pages, body_col=body_col)
-    cand = cand.where(onion_filter(F.col("host")))
-    cand = cand.where(protocol_filter(F.col("scheme")))
-    cand = cand.where(extension_filter(F.col("path"), config.allowed_extensions))
-    cand = apply_hostname_blacklist(cand, blacklist)
+    semantics, cache.go:9-12; ``round_ts`` defaults to now).  Rejected
+    URLs are never marked seen — only survivors reach the caller's
+    seen-append (scheduler_test.go:242-245).  ``seen_tail`` is a second
+    seen frame verified by its own anti-join: with the bucketed seen
+    store's base as ``seen`` (state/seenstore.py) the base scan stays
+    exchange-free, where a union would erase its bucket partitioning.
+    ``bloom`` routes D1 through the sharded Bloom prefilter.
 
-    # D2: in-round dedup (first occurrence wins in the reference; the set
-    # is identical under any tie-break)
-    cand = cand.dropDuplicates(["url_hash"])
+    With ``emit_edges`` the result is the tuple (new_urls, edges(src,
+    dst), cand_cache): the host-level link-graph delta for PageRank
+    priority, sharing ONE persisted extraction pass (the caller
+    unpersists ``cand_cache`` after its writes).
+    """
+    if "depth" not in pages.columns:
+        pages = pages.withColumn("depth", F.lit(0))
+    # the link-graph edge harvest widens the kernel's carry by one short
+    # host string ONLY when enabled — the default path stays narrow
+    carry = ("depth", "src_host") if emit_edges else ("depth",)
+    if emit_edges:
+        pages = pages.withColumn("src_host", F.col("host"))
+    bad = tuple(blacklist) if isinstance(blacklist, (list, tuple)) else ()
+    cand = extract_filtered_candidates(
+        pages, config, forbidden=bad, body_col=body_col, carry_cols=carry
+    )
+    if isinstance(blacklist, DataFrame):
+        cand = apply_hostname_blacklist(cand, blacklist)
+    url = F.col("url")
+    path = F.regexp_extract(url, r"^[a-z0-9+.-]+://[^/?#]*([^?#]*)", 1)
+    if robots is not None:
+        cand = apply_robots(cand.withColumn("path", path), robots).drop("path")
+    if config.trap_guard_enabled:
+        cand = cand.where(
+            ~trap_filter_col(path, F.regexp_extract(url, r"\?([^#]*)", 1))
+        )
+
+    edges = cand_cache = None
+    if emit_edges:
+        cand_cache = cand.persist()
+        edges = (
+            cand_cache.select(
+                F.col("src_host").alias("src"), F.col("host").alias("dst")
+            )
+            .where(F.col("src") != F.col("dst"))
+            .distinct()
+        )
+        cand = cand_cache.drop("src_host")
+
+    # D2 with deterministic attributes: url/host are functions of the
+    # hash; depth aggregates with min() (the reference keeps the first
+    # occurrence; the set is identical under any tie-break)
+    cand = cand.groupBy("url_hash").agg(
+        F.min("url").alias("url"),
+        F.min("host").alias("host"),
+        (F.min("depth") + 1).alias("depth"),
+    )
+    cand = cand.where(F.col("depth") <= config.max_depth)
 
     # D1: exact anti-join vs live seen entries, optionally routed through
     # the sharded Bloom prefilter (bit-miss candidates skip the shuffle)
     if seen is not None:
         if round_ts is None:
             round_ts = F.current_timestamp()
-        live_seen = seen.where(
-            F.col("expires_ts").isNull() | (F.col("expires_ts") > round_ts)
-        ).select("url_hash")
-        if bloom is not None:
-            from .bloom import bloom_anti_join
 
-            cand = bloom_anti_join(cand, live_seen, "url_hash", bloom)
+        def _live(s: DataFrame) -> DataFrame:
+            return s.where(
+                F.col("expires_ts").isNull() | (F.col("expires_ts") > round_ts)
+            ).select("url_hash")
+
+        live_seen = _live(seen)
+        live_tail = _live(seen_tail) if seen_tail is not None else None
+        if bloom is not None:
+            cand = bloom_anti_join(
+                cand, live_seen, "url_hash", bloom, tail=live_tail
+            )
         else:
             cand = cand.join(live_seen, "url_hash", "left_anti")
-
-    return cand.select("url", "url_hash", "host", "src_url")
+            if live_tail is not None:
+                cand = cand.join(live_tail, "url_hash", "left_anti")
+    out = cand.select("url", "url_hash", "host", "depth")
+    return (out, edges, cand_cache) if emit_edges else out
 
 
 def trap_filter_col(

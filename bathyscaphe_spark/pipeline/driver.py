@@ -44,9 +44,7 @@ def bootstrap(
     # seeds plan: the seeds expression (a window over the pages universe
     # in the bench) would otherwise be evaluated a second time for the
     # same rows (guide §1.2: don't compute things twice)
-    seen0 = catalog.spark.read.parquet(
-        catalog._round_dir("frontier", 0)
-    ).select(
+    seen0 = catalog.read_staged("frontier", 0).select(
         "url_hash",
         F.lit(-1).alias("first_seen_round"),
         F.lit(None).cast("timestamp").alias("expires_ts"),
@@ -267,7 +265,7 @@ def crawl(
     # last_committed_round() < 0: a pre-crawl set_config() commits a
     # config-only round, and keying on the round counter would silently
     # skip seed installation (the crawl would return [] with no error)
-    if not catalog._committed_rounds("frontier", None):
+    if not catalog.committed_rounds("frontier"):
         if seeds is None:
             raise ValueError("fresh state dir requires seeds")
         bootstrap(catalog, seeds, config)

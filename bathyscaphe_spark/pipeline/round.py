@@ -6,9 +6,12 @@ indexer + blacklister, SURVEY.md §3) with one declarative batch round:
   frontier Δ → O1 two-phase salted rank/budget → S4 fetch join (reusing
   the url-bucketed universe partitioning — O2)
   → [O4 timeouts → F7/F8/A1 blacklister] → F5 content filter
-  → X1-X3 extract/normalize/hash → F1-F4 + robots → D2 dedup → D1 anti-join seen
-  → writes: resources, seen Δ, frontier(round+1) Δ, host_failures,
-    blacklist, metrics → atomic round commit
+  → operators.scheduler.schedule_candidates (X1-X3 + F1-F4 kernel,
+    robots, D2 min-depth dedup, D1 anti-join seen)
+  → writes: timeouts and frontier(round+1) Δ first (they materialize the
+    caches), then one concurrent list of resources, seen Δ and the state
+    tables this round's features produced, metrics once resources lands
+  → atomic round commit of exactly the tables written
 
 Everything is one Catalyst-optimized DAG per output; ``fetched_ok`` is
 cached and reused by the scheduler and indexer branches — the same
@@ -22,6 +25,7 @@ parallelism level.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,13 +33,10 @@ from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 from ..operators import blacklister as bl
-from ..operators.bloom import ShardedBloom, bloom_anti_join
+from ..operators.bloom import ShardedBloom
 from ..operators.indexer import build_resources
 from ..operators.politeness import rank_frontier
-from ..operators.scheduler import (
-    apply_hostname_blacklist,
-    extract_filtered_candidates,
-)
+from ..operators.scheduler import _F4_EXPR_MAX, schedule_candidates
 from ..state.tables import TableCatalog
 from .synth import BASE_TS
 
@@ -53,118 +54,6 @@ class RoundStats:
     fetched: int
     timeouts: int
     discovered: int
-
-
-def discover_new_urls(
-    fetched_ok: DataFrame,
-    config: CrawlConfig,
-    seen: DataFrame | None,
-    blacklist,
-    round_n: int,
-    bloom: ShardedBloom | None = None,
-    robots: DataFrame | None = None,
-    emit_edges: bool = False,
-    seen_tail: DataFrame | None = None,
-):
-    """Scheduler stage with depth propagation.
-
-    Unlike ``operators.scheduler.schedule_candidates`` (the parity-exact
-    single-shot API), this variant carries the parent's depth through a
-    deterministic min() aggregation: depth = min(parent depth) + 1, and
-    applies robots disallow-prefix filtering (north-rule addition) so a
-    disallowed URL never enters the frontier.
-    Output: (url, url_hash, host, depth) — or, with ``emit_edges``,
-    the tuple (new_urls, edges(src,dst), cand_cache): the host-level
-    link-graph delta for PageRank priority, sharing ONE persisted
-    extraction pass (the caller unpersists ``cand_cache`` after its
-    writes).
-    """
-    # X1-X3 + F1-F4 in ONE narrow python stage: bodies in, only
-    # (depth, url, url_hash, host) out — rejected candidates and all
-    # derived strings stay inside the kernel (r2 scaling fix; the r1
-    # path's Arrow traffic was the N→4N bandwidth ceiling).  The
-    # link-graph edge harvest widens the carry by one short host string
-    # ONLY when enabled — the default hot path stays narrow.
-    bad = tuple(blacklist) if isinstance(blacklist, (list, tuple)) else ()
-    carry = ("depth", "src_host") if emit_edges else ("depth",)
-    src_df = (
-        fetched_ok.withColumn("src_host", F.col("host"))
-        if emit_edges
-        else fetched_ok
-    )
-    cand = extract_filtered_candidates(
-        src_df, config, forbidden=bad, body_col="html",
-        carry_cols=carry,
-    )
-    if blacklist is not None and not isinstance(blacklist, (list, tuple)):
-        cand = apply_hostname_blacklist(cand, blacklist)  # large-DF form
-    if robots is not None:
-        from ..operators.robots import apply_robots
-
-        cand = cand.withColumn(
-            "path",
-            F.regexp_extract(F.col("url"), r"^[a-z0-9+.-]+://[^/?#]*([^?#]*)", 1),
-        )
-        cand = apply_robots(cand, robots).drop("path")
-
-    if config.trap_guard_enabled:
-        from ..operators.scheduler import trap_filter_col
-
-        u = F.col("url")
-        cand = cand.where(
-            ~trap_filter_col(
-                F.regexp_extract(u, r"^[a-z0-9+.-]+://[^/?#]*([^?#]*)", 1),
-                F.regexp_extract(u, r"\?([^#]*)", 1),
-            )
-        )
-
-    edges = cand_cache = None
-    if emit_edges:
-        cand_cache = cand.persist()
-        edges = (
-            cand_cache.select(
-                F.col("src_host").alias("src"), F.col("host").alias("dst")
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        cand = cand_cache.drop("src_host")
-
-    # D2 with deterministic attributes: url/host are functions of the
-    # hash; depth aggregates with min() (parent depth rode through the
-    # explode — no self-join)
-    cand = cand.groupBy("url_hash").agg(
-        F.min("url").alias("url"),
-        F.min("host").alias("host"),
-        (F.min("depth") + 1).alias("depth"),
-    )
-    cand = cand.where(F.col("depth") <= config.max_depth)
-
-    if seen is not None:
-        rts = round_ts_col(round_n)
-
-        def _live(s: DataFrame) -> DataFrame:
-            return s.where(
-                F.col("expires_ts").isNull() | (F.col("expires_ts") > rts)
-            ).select("url_hash")
-
-        # D1: x is new ⟺ x ∉ live(seen) ∧ x ∉ live(seen_tail).  When
-        # ``seen`` is the bucketed store's base (state/seenstore.py) and
-        # ``seen_tail`` the post-compaction Δs, the two-join form keeps
-        # the base scan exchange-free (the TTL filter preserves its
-        # bucket partitioning; a union would erase it).
-        live_seen = _live(seen)
-        live_tail = _live(seen_tail) if seen_tail is not None else None
-        if bloom is not None:
-            cand = bloom_anti_join(
-                cand, live_seen, "url_hash", bloom, tail=live_tail
-            )
-        else:
-            cand = cand.join(live_seen, "url_hash", "left_anti")
-            if live_tail is not None:
-                cand = cand.join(live_tail, "url_hash", "left_anti")
-    out = cand.select("url", "url_hash", "host", "depth")
-    return (out, edges, cand_cache) if emit_edges else out
 
 
 def _with_base_priority(frontier: DataFrame) -> DataFrame:
@@ -219,6 +108,61 @@ def _seen_delta(new_urls: DataFrame, config: CrawlConfig, round_n: int) -> DataF
     )
 
 
+def _submit_writes(
+    pool: ThreadPoolExecutor,
+    catalog: TableCatalog,
+    round_n: int,
+    writes: list[tuple[str, DataFrame, int | None]],
+) -> dict:
+    """Submit each (table, frame, files) stage write to the writer pool;
+    returns {table: future} for the tables written."""
+    return {
+        name: pool.submit(catalog.stage_round, name, df, round_n, files=files)
+        for name, df, files in writes
+    }
+
+
+def _round_metrics(
+    spark: SparkSession, scheduled: DataFrame, fetched_ok: DataFrame,
+    stats: RoundStats,
+) -> DataFrame:
+    """Per-partition lineage for the fetch and schedule stages (north
+    rule: per-partition lineage + metrics per round) plus one row per
+    stage total.  One write job; its inputs are cached."""
+    round_n = stats.round
+
+    def lineage(df: DataFrame, stage: str) -> DataFrame:
+        return (
+            df.groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(F.count(F.lit(1)).alias("rows"))
+            .select(
+                F.lit(round_n).alias("round"),
+                F.lit(stage).alias("stage"),
+                "partition_id",
+                "rows",
+            )
+        )
+
+    stage_rows = [
+        (round_n, s, -1, int(v))
+        for s, v in (
+            ("fetched", stats.fetched),
+            ("timeouts", stats.timeouts),
+            ("discovered", stats.discovered),
+        )
+    ]
+    return (
+        lineage(scheduled, "scheduled")
+        .unionByName(lineage(fetched_ok, "fetch"))
+        .unionByName(
+            spark.createDataFrame(
+                stage_rows,
+                "round int, stage string, partition_id int, rows bigint",
+            )
+        )
+    )
+
+
 def run_round(
     catalog: TableCatalog,
     pages: DataFrame,
@@ -260,8 +204,6 @@ def run_round(
     # collect the (tiny) blacklist ONCE per round: every F4 call site
     # then compiles it into a codegen'd OR-chain instead of re-collecting
     # (falls back to the broadcast anti-join DataFrame form when large)
-    from ..operators.scheduler import _F4_EXPR_MAX
-
     # F4 source = the blacklister's promoted state UNION the config's
     # forbidden-hostnames (S11: mutable at round boundaries via
     # state/configstore.set_config — mirrors the reference where both
@@ -551,18 +493,14 @@ def run_round(
 
     # scheduler — discover next frontier (robots state is optional: a
     # committed `robots` table gates candidates by disallow prefix)
-    link_edges = cand_cache = None
-    if config.link_rank_enabled:
-        new_urls, link_edges, cand_cache = discover_new_urls(
-            extract_src, config, seen_verify, blacklist_pred, round_n,
-            bloom=bloom, robots=robots_df, emit_edges=True,
-            seen_tail=seen_tail,
-        )
-    else:
-        new_urls = discover_new_urls(
-            extract_src, config, seen_verify, blacklist_pred, round_n,
-            bloom=bloom, robots=robots_df, seen_tail=seen_tail,
-        )
+    found = schedule_candidates(
+        extract_src, config, seen=seen_verify, blacklist=blacklist_pred,
+        round_ts=rts, bloom=bloom, robots=robots_df,
+        emit_edges=config.link_rank_enabled, seen_tail=seen_tail,
+    )
+    new_urls, link_edges, cand_cache = (
+        found if config.link_rank_enabled else (found, None, None)
+    )
     if config.fetch_robots:
         # proactive robots: schedule /robots.txt (depth 0 ⇒ top priority)
         # for hosts discovered this round that have no robots state yet
@@ -648,78 +586,83 @@ def run_round(
     next_delta = leftover.unionByName(new_delta)
     catalog.stage_round("frontier", next_delta, round_n + 1)
 
-    committed_tables = ["seen", "resources", "timeouts", "metrics"]
+    # D3 seen Δ: only URLs actually scheduled are marked seen
+    if config.adaptive_refresh:
+        from ..operators.recrawl import adaptive_seen_delta
+
+        meta_all = fetch_meta_delta
+        if prior_meta is not None:
+            meta_all = prior_meta.select(*fetch_meta_delta.columns).unionByName(
+                fetch_meta_delta
+            )
+        # seen rows are (re)written for this round's discoveries AND
+        # for every SCHEDULED url that no longer had a live seen row
+        # (a refetch — the pump path, or a TTL that lapsed in-flight):
+        # the refetch is the moment the change history grows, so it
+        # is when the adapted TTL must be (re)armed
+        targets = new_urls.select("url_hash")
+        if seen is not None:
+            refetched = scheduled.select("url_hash").join(
+                seen.where(
+                    F.col("expires_ts").isNull() | (F.col("expires_ts") > rts)
+                ).select("url_hash"),
+                "url_hash",
+                "left_anti",
+            )
+            targets = targets.unionByName(refetched).dropDuplicates(["url_hash"])
+        seen_delta = adaptive_seen_delta(
+            targets,
+            seen,
+            meta_all,
+            now_s=BASE_TS + round_n * ROUND_INTERVAL_S,
+            base_s=config.refresh_delay_s,
+            min_s=config.refresh_min_s,
+            max_s=config.refresh_max_s,
+            round_n=round_n,
+        )
+    else:
+        seen_delta = _seen_delta(new_urls, config, round_n)
+
+    # Phase B (concurrent): the remaining writes only read warm caches /
+    # tiny staged files — independent Spark jobs, overlapped via threads
+    # (the scheduler interleaves their tasks; wall ≈ max, not sum).  The
+    # plans are built here; an optional state table joins the list only
+    # when its feature produced a frame, so the list is exactly what the
+    # round commits.  fetch_meta goes first: the adaptive seen Δ reads
+    # the same fetch cache (ordering only affects warm-cache reuse, not
+    # correctness).
+    writes: list[tuple[str, DataFrame, int | None]] = []
+    if fetch_meta_delta is not None:
+        writes.append(("fetch_meta", fetch_meta_delta, small_files))
+    writes += [("seen", seen_delta, None), ("resources", resources, None)]
 
     # blacklister reads the tiny staged timeouts back from parquet —
     # avoids recomputing the fetch join for the timeout branch.  When the
     # round produced no timeouts and there is no live counter state, the
     # host_failures/blacklist states are unchanged — skip their rewrites
     # entirely (read_state falls back to the latest committed round).
-    hf_rounds = catalog._committed_rounds("host_failures", None)
+    hf_rounds = catalog.committed_rounds("host_failures")
     prev_hf_rows = (
         catalog.rows_in_round("host_failures", hf_rounds[-1]) if hf_rounds else 0
     )
-
-    # Phase B (concurrent): the remaining writes only read warm caches /
-    # tiny staged files — independent Spark jobs, overlapped via threads
-    # (the scheduler interleaves their tasks; wall ≈ max, not sum).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_seen():
-        if config.adaptive_refresh:
-            from ..operators.recrawl import adaptive_seen_delta
-
-            meta_all = fetch_meta_delta
-            if prior_meta is not None:
-                meta_all = prior_meta.select(*fetch_meta_delta.columns).unionByName(
-                    fetch_meta_delta
-                )
-            # seen rows are (re)written for this round's discoveries AND
-            # for every SCHEDULED url that no longer had a live seen row
-            # (a refetch — the pump path, or a TTL that lapsed in-flight):
-            # the refetch is the moment the change history grows, so it
-            # is when the adapted TTL must be (re)armed
-            targets = new_urls.select("url_hash")
-            if seen is not None:
-                refetched = scheduled.select("url_hash").join(
-                    seen.where(
-                        F.col("expires_ts").isNull() | (F.col("expires_ts") > rts)
-                    ).select("url_hash"),
-                    "url_hash",
-                    "left_anti",
-                )
-                targets = targets.unionByName(refetched).dropDuplicates(["url_hash"])
-            delta = adaptive_seen_delta(
-                targets,
-                seen,
-                meta_all,
-                now_s=BASE_TS + round_n * ROUND_INTERVAL_S,
-                base_s=config.refresh_delay_s,
-                min_s=config.refresh_min_s,
-                max_s=config.refresh_max_s,
-                round_n=round_n,
-            )
-        else:
-            delta = _seen_delta(new_urls, config, round_n)
-        catalog.stage_round("seen", delta, round_n)
-
-    def _write_fetch_meta():
-        if fetch_meta_delta is None:
-            return False
-        catalog.stage_round(
-            "fetch_meta", fetch_meta_delta, round_n, files=small_files
+    if n_timeouts or prev_hf_rows:
+        timeouts_df = (
+            catalog.read_staged("timeouts", round_n).select("url", "host")
+            if n_timeouts
+            else timeouts.limit(0)
         )
-        return True
-
-    def _write_resources():
-        catalog.stage_round("resources", resources, round_n)
-
-    def _write_robots():
-        """Harvest fetched robots.txt bodies into the robots state
-        (disallow prefixes + Crawl-delay); hosts re-advertising replace
-        their previous entry."""
-        if not config.fetch_robots:
-            return False
+        new_hf, new_bl = bl.process_timeouts(
+            timeouts_df, host_failures, blacklist_df, host_status, config, rts
+        )
+        writes += [
+            ("host_failures", new_hf, small_files),
+            ("blacklist", new_bl, small_files),
+        ]
+    if config.fetch_robots:
+        # harvest fetched robots.txt bodies into the robots state
+        # (disallow prefixes + Crawl-delay); hosts re-advertising replace
+        # their previous entry.  The emptiness probe is a (small) job run
+        # before the pool starts, only when fetch_robots is on.
         from ..operators.robots import empty_robots, robots_table_from_fetch
 
         new_rob = robots_table_from_fetch(
@@ -727,65 +670,23 @@ def run_round(
                 "host", "html"
             )
         )
-        if not new_rob.limit(1).count():
-            return False
-        old = robots_df if robots_df is not None else empty_robots(spark)
-        if "crawl_delay_s" not in old.columns:  # pre-delay state dirs
-            old = old.withColumn(
-                "crawl_delay_s", F.lit(None).cast("double")
-            )
-        merged = old.join(
-            F.broadcast(new_rob.select("host")), "host", "left_anti"
-        ).unionByName(new_rob)
-        catalog.stage_round("robots", merged, round_n, files=small_files)
-        return True
-
-    # blacklister plans are built in the main thread (plan-only, no job)
-    # so the two state writes can overlap as independent pool tasks
-    # instead of running back-to-back in one thread
-    do_blacklister = bool(n_timeouts or prev_hf_rows)
-    if do_blacklister:
-        timeouts_df = (
-            spark.read.parquet(catalog._round_dir("timeouts", round_n)).select(
-                "url", "host"
-            )
-            if n_timeouts
-            else timeouts.limit(0)
-        )
-        new_hf, new_bl = bl.process_timeouts(
-            timeouts_df, host_failures, blacklist_df, host_status, config, rts
-        )
-
-    def _write_host_failures():
-        if not do_blacklister:
-            return False
-        catalog.stage_round("host_failures", new_hf, round_n, files=small_files)
-        return True
-
-    def _write_blacklist():
-        if not do_blacklister:
-            return False
-        catalog.stage_round("blacklist", new_bl, round_n, files=small_files)
-        return True
-
-    def _write_repute():
-        if repute_delta is None:
-            return False
-        catalog.stage_round(
-            "host_repute", repute_delta, round_n, files=small_files
-        )
-        return True
-
-    def _write_edges():
-        if link_edges is None:
-            return False
-        catalog.stage_round(
-            "link_edges",
-            link_edges.withColumn("round", F.lit(round_n)),
-            round_n,
-            files=small_files,
-        )
-        return True
+        if new_rob.limit(1).count():
+            old = robots_df if robots_df is not None else empty_robots(spark)
+            if "crawl_delay_s" not in old.columns:  # pre-delay state dirs
+                old = old.withColumn(
+                    "crawl_delay_s", F.lit(None).cast("double")
+                )
+            merged = old.join(
+                F.broadcast(new_rob.select("host")), "host", "left_anti"
+            ).unionByName(new_rob)
+            writes.append(("robots", merged, small_files))
+    if link_edges is not None:
+        writes.append((
+            "link_edges", link_edges.withColumn("round", F.lit(round_n)),
+            small_files,
+        ))
+    if repute_delta is not None:
+        writes.append(("host_repute", repute_delta, small_files))
 
     stats = RoundStats(
         round=round_n,
@@ -794,96 +695,35 @@ def run_round(
         timeouts=n_timeouts,
         discovered=catalog.rows_in_round("frontier", round_n + 1),
     )
-
-    def _write_metrics():
-        # per-partition lineage for the fetch and schedule stages (north
-        # rule: per-partition lineage + metrics per round) — one write
-        # job, inputs are cached.  The fetched total comes from the
-        # resources write's parquet footers, so the caller submits this
-        # task only after the resources future resolves (everything
-        # else it reads is already staged or cached).
-        stats.fetched = catalog.rows_in_round("resources", round_n)
-        lineage = (
-            scheduled.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .select(
-                F.lit(round_n).alias("round"),
-                F.lit("scheduled").alias("stage"),
-                "partition_id",
-                "rows",
-            )
-            .unionByName(
-                fetched_ok.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .select(
-                    F.lit(round_n).alias("round"),
-                    F.lit("fetch").alias("stage"),
-                    "partition_id",
-                    "rows",
-                )
-            )
-        )
-        stage_rows = [
-            (round_n, s, -1, int(v))
-            for s, v in (
-                ("fetched", stats.fetched),
-                ("timeouts", stats.timeouts),
-                ("discovered", stats.discovered),
-            )
-        ]
-        metrics = lineage.unionByName(
-            spark.createDataFrame(stage_rows, "round int, stage string, partition_id int, rows bigint")
-        )
-        catalog.stage_round("metrics", metrics, round_n, files=small_files)
-
-    # No task ever blocks on another task's future inside a worker
-    # (that shape deadlocks the round forever the first time a submit
-    # is added without resizing the pool): _write_metrics' one
-    # dependency is expressed by submitting it from the main thread
-    # AFTER f_res resolves, so pool sizing is a throughput knob only.
+    # No task ever blocks on another task's future inside a worker (that
+    # shape deadlocks the round the first time a write is added without
+    # resizing the pool): the metrics write's one dependency — the
+    # fetched total from the resources footers — is expressed by
+    # submitting it from this thread AFTER resources lands, so pool
+    # sizing is a throughput knob only.
     with ThreadPoolExecutor(max_workers=8) as pool:
-        # fetch_meta first: _write_seen reads the staged delta's plan
-        # inputs (both derive from the fetched cache, so ordering only
-        # affects warm-cache reuse, not correctness)
-        f_meta = pool.submit(_write_fetch_meta)
-        f_seen = pool.submit(_write_seen)
-        f_res = pool.submit(_write_resources)
-        f_hf = pool.submit(_write_host_failures)
-        f_blk = pool.submit(_write_blacklist)
-        f_rob = pool.submit(_write_robots)
-        f_edges = pool.submit(_write_edges)
-        f_rep = pool.submit(_write_repute)
-        f_res.result()
-        f_metrics = pool.submit(_write_metrics)  # overlaps the rest
-        f_seen.result()
-        f_metrics.result()
-        if f_meta.result():
-            committed_tables += ["fetch_meta"]
-        if f_hf.result() and f_blk.result():
-            committed_tables += ["host_failures", "blacklist"]
-        if f_rob.result():
-            committed_tables += ["robots"]
-        if f_edges.result():
-            committed_tables += ["link_edges"]
-        if f_rep.result():
-            committed_tables += ["host_repute"]
+        pending = _submit_writes(pool, catalog, round_n, writes)
+        pending["resources"].result()
+        stats.fetched = catalog.rows_in_round("resources", round_n)
+        metrics = _round_metrics(spark, scheduled, fetched_ok, stats)
+        pending |= _submit_writes(
+            pool, catalog, round_n, [("metrics", metrics, small_files)]
+        )
+        for f in pending.values():
+            f.result()
+    committed_tables = ["timeouts", *pending]
     # scheduled count from the just-written lineage parquet (no job)
-    import pyarrow.parquet as pq
-    import glob as _glob
-    import os as _os
-
-    sched = 0
-    for f in _glob.glob(_os.path.join(catalog._round_dir("metrics", round_n), "*.parquet")):
-        t = pq.read_table(f, columns=["stage", "rows"])
-        for s, r in zip(t["stage"].to_pylist(), t["rows"].to_pylist()):
-            if s == "scheduled":
-                sched += r
-    stats.scheduled = sched
+    stats.scheduled = sum(
+        row["rows"]
+        for batch in catalog.round_batches("metrics", round_n, ["stage", "rows"])
+        for row in batch.to_pylist()
+        if row["stage"] == "scheduled"
+    )
     # discovered = NEW urls only: next-delta rows minus the requeued
     # leftovers (frontier_rows - scheduled), all from footers/lineage —
     # no extra jobs
     n_frontier = catalog.rows_in_round("frontier", round_n)
-    stats.discovered = max(0, stats.discovered - (n_frontier - sched))
+    stats.discovered = max(0, stats.discovered - (n_frontier - stats.scheduled))
 
     # ---- atomic publish: the round's tables AND the produced frontier Δ
     # (keyed under round_n+1 so read_round finds it) go out in ONE manifest

@@ -6033,30 +6033,33 @@ def _stage_stream_batches(
     ``maxFilesPerTrigger=1`` consumes).  Row order within a batch file
     is not part of any stream kernel's contract (the kernels sort or
     aggregate per key), so the shuffle's nondeterministic row order is
-    immaterial.
+    immaterial.  A batch with no rows gets a schema-only file, so the
+    stream keeps its batch count and arrival order.
     """
     import glob
     import os
     import shutil
     import time as _time
 
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     in_dir = os.path.join(root, "in")
     os.makedirs(in_dir, exist_ok=True)
     stage = os.path.join(root, "stage_all")
-    (
-        df.withColumn("_b", batch_col.cast("int"))
-        .select("_b", *cols)
-        .repartition(F.col("_b"))
-        .write.partitionBy("_b")
-        .parquet(stage)
-    )
+    staged = df.withColumn("_b", batch_col.cast("int")).select("_b", *cols)
+    staged.repartition(F.col("_b")).write.partitionBy("_b").parquet(stage)
     t0 = int(_time.time())
     for b in range(n_batches):
         parts = glob.glob(os.path.join(stage, f"_b={b}", "*.parquet"))
-        if len(parts) != 1:
+        if len(parts) > 1:
             raise RuntimeError(f"batch {b}: expected 1 file, got {parts}")
         dst = os.path.join(in_dir, f"batch-{b}.parquet")
-        shutil.move(parts[0], dst)
+        if parts:
+            shutil.move(parts[0], dst)
+        else:
+            schema = to_arrow_schema(staged.drop("_b").schema)
+            pq.write_table(schema.empty_table(), dst)
         os.utime(dst, (t0 + b, t0 + b))
     return in_dir
 

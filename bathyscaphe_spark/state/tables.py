@@ -33,6 +33,7 @@ value, appends never rewrite history, and the periodic
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -40,6 +41,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -223,7 +225,8 @@ class TableCatalog:
                         shutil.rmtree(path, ignore_errors=True)
 
     # --- reads ------------------------------------------------------------
-    def _committed_rounds(self, name: str, upto: int | None) -> list[int]:
+    def committed_rounds(self, name: str, upto: int | None = None) -> list[int]:
+        """Sorted rounds whose manifest entry lists ``name`` (≤ ``upto``)."""
         rounds = []
         for r, info in self.manifest["rounds"].items():
             rn = int(r)
@@ -237,7 +240,7 @@ class TableCatalog:
         """Append-only table: union of all committed round deltas ≤ upto
         (and > ``since``, when given — the tail read the bucketed seen
         store composes with, state/seenstore.py)."""
-        rounds = self._committed_rounds(name, upto)
+        rounds = self.committed_rounds(name, upto)
         if since is not None:
             rounds = [r for r in rounds if r > since]
         paths = [self._round_dir(name, r) for r in rounds]
@@ -248,13 +251,19 @@ class TableCatalog:
 
     def read_round(self, name: str, round_n: int) -> DataFrame | None:
         path = self._round_dir(name, round_n)
-        if round_n not in self._committed_rounds(name, round_n) or not os.path.exists(path):
+        if round_n not in self.committed_rounds(name, round_n) or not os.path.exists(path):
             return None
         return self.spark.read.parquet(path)
 
+    def read_staged(self, name: str, round_n: int) -> DataFrame:
+        """One round directory as ``stage_round`` left it, committed or
+        not — how a round (or the bootstrap) reads back its own staged
+        output before the commit publishes it."""
+        return self.spark.read.parquet(self._round_dir(name, round_n))
+
     def read_state(self, name: str, upto: int | None = None) -> DataFrame | None:
         """Full-state table: the latest committed rewrite ≤ upto."""
-        rounds = self._committed_rounds(name, upto)
+        rounds = self.committed_rounds(name, upto)
         if not rounds:
             return None
         return self.spark.read.parquet(self._round_dir(name, rounds[-1]))
@@ -271,7 +280,7 @@ class TableCatalog:
         superseded dirs are removed afterwards (readers go through the
         manifest, never the directory listing).  Returns the number of
         rounds folded."""
-        rounds = self._committed_rounds(name, None)
+        rounds = self.committed_rounds(name)
         if len(rounds) <= 1:
             return 0
         df = self.read_deltas(name)
@@ -342,7 +351,7 @@ class TableCatalog:
         horizon = max(done) - keep_last + 1
         victims: list[tuple[str, int]] = []
         for name in self.FULL_STATE_TABLES:
-            committed = self._committed_rounds(name, None)
+            committed = self.committed_rounds(name)
             victims += [
                 (name, r) for r in committed[:-1] if r < horizon
             ]
@@ -366,6 +375,17 @@ class TableCatalog:
             shutil.rmtree(self._round_dir(name, r), ignore_errors=True)
         return removed
 
+    def _round_files(self, name: str, round_n: int) -> list[str]:
+        return sorted(
+            glob.glob(os.path.join(self._round_dir(name, round_n), "*.parquet"))
+        )
+
+    def round_batches(self, name: str, round_n: int, columns: list[str]):
+        """Arrow record batches of ``columns`` from one staged or committed
+        round directory, read driver-side with pyarrow — no Spark job."""
+        for f in self._round_files(name, round_n):
+            yield from pq.ParquetFile(f).iter_batches(columns=columns)
+
     def head_of_state(
         self, name: str, column: str, limit: int
     ) -> list | None:
@@ -376,35 +396,22 @@ class TableCatalog:
         table has no committed round (callers fall back to the empty
         DataFrame they already hold) — values come from the same parquet
         files ``read_state`` would scan, so the result is identical."""
-        import glob as _glob
-
-        import pyarrow.parquet as pq
-
-        rounds = self._committed_rounds(name, None)
+        rounds = self.committed_rounds(name)
         if not rounds:
             return None
         out: list = []
-        for f in sorted(
-            _glob.glob(os.path.join(self._round_dir(name, rounds[-1]), "*.parquet"))
-        ):
-            pf = pq.ParquetFile(f)
-            for batch in pf.iter_batches(columns=[column]):
-                out.extend(batch.column(0).to_pylist())
-                if len(out) >= limit:
-                    return out[:limit]
+        for batch in self.round_batches(name, rounds[-1], [column]):
+            out.extend(batch.column(0).to_pylist())
+            if len(out) >= limit:
+                return out[:limit]
         return out
 
     def rows_in_round(self, name: str, round_n: int) -> int:
         """Exact row count of a staged/committed round directory from the
         parquet footers — no Spark job."""
-        import glob as _glob
-
-        import pyarrow.parquet as pq
-
-        total = 0
-        for f in _glob.glob(os.path.join(self._round_dir(name, round_n), "*.parquet")):
-            total += pq.read_metadata(f).num_rows
-        return total
+        return sum(
+            pq.read_metadata(f).num_rows for f in self._round_files(name, round_n)
+        )
 
     def destroy(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)

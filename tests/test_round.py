@@ -317,3 +317,72 @@ def test_incremental_bloom_parity_and_rebuild(spark, tmp_path, universe):
           max_rounds=3)
     fa = _frontier_sets(spark, a)
     assert fa == _frontier_sets(spark, b) == _frontier_sets(spark, c)
+
+
+def _tables_universe(spark):
+    """Seed root.onion links to five a.onion pages (whose host serves a
+    robots.txt) and to t.onion, whose only page times out: round 0
+    fetches the seed, round 1 fetches the discoveries and records one
+    timeout."""
+    from pyspark.sql import functions as F
+
+    from bathyscaphe_spark.operators.crawler import STATUS_TIMEOUT
+
+    pages = [f"http://a.onion/p{i}.html" for i in range(5)]
+    links = " ".join(
+        f"<a href='{u}'>x</a>" for u in [*pages, "http://t.onion/x.html"]
+    )
+    rows = [
+        ("http://root.onion", "root.onion", links, 200),
+        ("http://a.onion/robots.txt", "a.onion",
+         "User-agent: *\nDisallow: /secret\n", 200),
+        ("http://t.onion/x.html", "t.onion", "", STATUS_TIMEOUT),
+    ] + [(u, "a.onion", f"<title>p</title> page {u}", 200) for u in pages]
+    uni = spark.createDataFrame(
+        rows, "url string, host string, html string, status int"
+    ).select(
+        "url", "host", F.col("html").cast("binary").alias("html"),
+        F.create_map(F.lit("Content-Type"), F.lit("text/html")).alias("headers"),
+        "status",
+        F.to_timestamp(F.lit("2024-05-01 12:00:00")).alias("warc_ts"),
+    )
+    seeds = spark.createDataFrame(
+        [("http://root.onion", "root.onion")], "url string, host string"
+    )
+    return uni, seeds
+
+
+BASE_TABLES = {"frontier", "metrics", "resources", "seen", "timeouts"}
+
+
+@pytest.mark.parametrize(
+    "flags,extra0,extra1",
+    [
+        ({}, set(), set()),
+        ({"fetch_robots": True}, set(), {"robots"}),
+        ({"link_rank_enabled": True}, {"link_edges"}, {"link_edges"}),
+        ({"reputation_enabled": True}, {"host_repute"}, {"host_repute"}),
+        (
+            {"adaptive_refresh": True, "refresh_delay_s": 3600},
+            {"fetch_meta"},
+            {"fetch_meta"},
+        ),
+    ],
+    ids=["default", "fetch_robots", "link_rank", "reputation", "adaptive"],
+)
+def test_round_commits_exactly_its_tables(spark, tmp_path, flags, extra0, extra1):
+    """The manifest lists exactly the tables each round wrote: the base
+    set, each enabled feature's table, host_failures + blacklist only in
+    the round with a timeout, robots only once a robots.txt was fetched."""
+    uni, seeds = _tables_universe(spark)
+    cfg = CrawlConfig(per_host_budget=10, bloom_enabled=False, **flags)
+    state = str(tmp_path / "st")
+    stats = crawl(spark, uni, seeds, state, cfg, max_rounds=2)
+    assert [s.timeouts for s in stats] == [0, 1]
+    rounds = TableCatalog(spark, state).manifest["rounds"]
+    assert {r: set(e["tables"]) for r, e in rounds.items()} == {
+        "-1": {"seen"},
+        "0": BASE_TABLES | extra0,
+        "1": BASE_TABLES | {"host_failures", "blacklist"} | extra1,
+        "2": {"frontier"},
+    }

@@ -141,6 +141,37 @@ def test_f4_dataframe_blacklist(spark):
     assert [r["host"] for r in out] == ["ok.onion"]
 
 
+def test_f4_large_dataframe_blacklist_matches_tuple_form(spark):
+    """A blacklist DataFrame past _F4_EXPR_MAX hosts takes the broadcast
+    theta anti-join branch; it must schedule exactly the rows the
+    in-kernel tuple form does (substring-contains semantics included)."""
+    from bathyscaphe_spark.operators.scheduler import _F4_EXPR_MAX
+
+    hosts = [f"bad{i}.onion" for i in range(_F4_EXPR_MAX + 6)]
+    urls = [f"https://{h}/a.html" for h in hosts[::7]] + [
+        "https://www.bad3.onion/x.php",  # contains a blacklisted host
+        "https://ok1.onion/a.html",
+        "https://ok2.onion/b.php?id=1",
+        "https://bad.onion/c.html",  # no blacklisted host is a substring
+    ]
+    pages = _pages(spark, " ".join(urls))
+    bl = spark.createDataFrame([(h,) for h in hosts], "hostname string")
+    out_df = schedule_candidates(pages, HTML_PHP, blacklist=bl)
+    plan = out_df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" in plan
+    by_df = sorted(tuple(r) for r in out_df.collect())
+    by_tuple = sorted(
+        tuple(r)
+        for r in schedule_candidates(pages, HTML_PHP, blacklist=tuple(hosts)).collect()
+    )
+    assert by_df == by_tuple
+    assert sorted(r[0] for r in by_df) == [
+        "https://bad.onion/c.html",
+        "https://ok1.onion/a.html",
+        "https://ok2.onion/b.php?id=1",
+    ]
+
+
 def test_d2_in_round_dedup(spark):
     body = "dup https://a.onion/x.html and again https://a.onion/x.html"
     out = schedule_candidates(_pages(spark, body), HTML_PHP).collect()

@@ -23,7 +23,7 @@ def test_compact_deltas(spark, tmp_path):
     after = sorted(r["url_hash"] for r in cat.read_deltas("seen").collect())
     assert before == after
     # only one physical round dir remains and it is the max round
-    assert cat._committed_rounds("seen", None) == [3]
+    assert cat.committed_rounds("seen") == [3]
     # idempotent: nothing left to fold
     assert cat.compact_deltas("seen") == 0
 
@@ -541,3 +541,31 @@ def test_dedup_shard_eviction_survives_rollup():
                    list(range(b * 100, b * 100 + 100)))
         _chunks, n = st.get
         assert n <= 150, f"state grew past the cap at batch {b}: {n}"
+
+
+def test_stage_stream_batches_keeps_empty_micro_batch(spark, tmp_path):
+    """A micro-batch with no rows still arrives — as a schema-only file —
+    so the fixture stream keeps its batch count and arrival order."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from bathyscaphe_spark.queries import _stage_stream_batches
+
+    df = spark.range(6).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        F.col("id").alias("url_hash"),
+    )
+    # batch ids 0 and 2 only: batch 1 has no rows
+    in_dir = _stage_stream_batches(
+        df, (F.col("url_hash") % 2) * 2, 3, str(tmp_path), ["url", "url_hash"]
+    )
+    files = [os.path.join(in_dir, f"batch-{b}.parquet") for b in range(3)]
+    assert sorted(os.listdir(in_dir)) == [os.path.basename(f) for f in files]
+    mtimes = [os.path.getmtime(f) for f in files]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == 3
+    empty = pq.read_table(files[1])
+    assert empty.num_rows == 0
+    assert empty.column_names == ["url", "url_hash"]
+    streamed = spark.read.schema("url string, url_hash long").parquet(in_dir)
+    assert sorted(r["url_hash"] for r in streamed.collect()) == list(range(6))
